@@ -5,5 +5,5 @@
 - ``dedup``      : exact + MinHash-LSH + SimHash + n-gram Jaccard dedup.
 - ``similarity`` : cosine ANN (brute-force baseline + LSH-bucketed).
 - ``textops``    : language-ID, quality scoring, token counts, fingerprints.
-- ``multimodal`` : opaque binary columns + typed metadata plumbing.
+- ``multimodal`` : RIFF/WAVE audio codec + clip statistics and resample.
 """

@@ -629,32 +629,6 @@ def ngram_containment_pairs_blocked(
 # ---------------------------------------------------------------------------
 # SimHash
 # ---------------------------------------------------------------------------
-def simhash64(col: Column) -> Column:
-    """64-bit SimHash of the word multiset of a text column (single-row
-    expression form — use :func:`simhash_fingerprints` for corpora; this
-    form recomputes the token array per bit and is only sensible for
-    tests / tiny inputs)."""
-    token_hashes = F.transform(words(col), lambda t: F.xxhash64(t))
-
-    def _bit_vote(i: int):
-        def vote(acc: Column, h: Column) -> Column:
-            return acc + F.when(
-                F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1, 1
-            ).otherwise(-1)
-
-        return vote
-
-    fp = F.lit(0).cast("long")
-    for i in range(64):  # unrolled: shift amounts must be literals
-        vote = F.aggregate(token_hashes, F.lit(0), _bit_vote(i))
-        fp = fp.bitwiseOR(
-            F.when(vote > 0, F.shiftleft(F.lit(1).cast("long"), i)).otherwise(
-                F.lit(0).cast("long")
-            )
-        )
-    return fp
-
-
 SIMHASH_BITS = 60  # md5_hash60 base hash width (cross-engine exact)
 
 

@@ -330,8 +330,7 @@ def bloom_bitmap(
     # 2^27 bits (16 MB — the top of the "few hundred MB broadcast is
     # fine" envelope with headroom); past that, shard the build side or
     # add a sparse representation. Multiple-of-64 keeps size(bloom_words)
-    # * 64 == m_bits exactly, which is what lets probes validate
-    # build/probe agreement (bloom_m_bits below).
+    # * 64 == m_bits exactly.
     if m_bits <= 0 or m_bits % 64 != 0:
         raise ValueError(f"bloom m_bits must be a positive multiple of 64, got {m_bits}")
     if m_bits > (1 << 27):
@@ -385,29 +384,33 @@ def bloom_bitmap(
                 ),
             ).alias("bloom_words"),
             "bloom_bits_set",
-            # carried build parameter: probes assert agreement on it
-            # (r12 advisor — a probe with a different m_bits would
-            # compute positions under a different modulus and be
-            # silently wrong; bloom_pass_flag raises instead)
-            F.lit(int(m_bits)).alias("bloom_m_bits"),
+            # carried build parameters: probes assert agreement on them
+            # (bloom_pass_flag)
+            F.lit(_bloom_params(m_bits, k, tag)).alias("bloom_params"),
         )
         .crossJoin(F.broadcast(n_keys))
     )
+
+
+def _bloom_params(m_bits: int, k: int, tag: str) -> str:
+    """Fingerprint of every parameter that decides a key's bit positions."""
+    return f"m_bits={int(m_bits)},k={int(k)},tag={tag}"
 
 
 def bloom_pass_flag(
     key, m_bits: int = 8192, k: int = 3, tag: str = "bloom"
 ):
     """Membership predicate column for a probe row already cross-joined
-    with the :func:`bloom_bitmap` row (``bloom_words`` + ``bloom_m_bits``
+    with the :func:`bloom_bitmap` row (``bloom_words`` + ``bloom_params``
     in scope). True iff ALL k bit positions of the key are set — may
     include false positives, never false negatives.
 
-    Build/probe parameter agreement is ENFORCED (r12 advisor): a probe
-    whose ``m_bits`` differs from the bitmap's computes bit positions
-    under a different modulus — silently wrong membership (false
-    negatives possible). The bitmap row carries ``bloom_m_bits``; a
-    mismatch raises at evaluation instead of returning garbage."""
+    A probe whose ``m_bits``, ``k`` or ``tag`` differs from the build's
+    computes bit positions the build never set: silently wrong
+    membership, false negatives included. So every evaluated probe row
+    compares the bitmap row's ``bloom_params`` with this call's
+    ``(m_bits, k, tag)`` and raises on a mismatch. The check is per row:
+    a probe side with no rows evaluates nothing and raises nothing."""
     from .xhash import hconsts, md5_hash60, mix60
 
     h = md5_hash60(key.cast("string"))
@@ -425,12 +428,14 @@ def bloom_pass_flag(
             )
             != 0
         )
-    return F.when(F.col("bloom_m_bits") == F.lit(int(m_bits)), flag).otherwise(
+    params = _bloom_params(m_bits, k, tag)
+    return F.when(F.col("bloom_params") == F.lit(params), flag).otherwise(
         F.raise_error(
             F.format_string(
-                "bloom build/probe m_bits mismatch: bitmap built with %s, "
-                f"probed with {int(m_bits)}",
-                F.col("bloom_m_bits"),
+                "bloom build/probe parameter mismatch: bitmap built with %s, "
+                "probed with %s",
+                F.col("bloom_params"),
+                F.lit(params),
             )
         ).cast("boolean")
     )
@@ -450,10 +455,11 @@ def bloom_semi_join(
     map-side predicate, NO shuffle of the probe side. Admits false
     positives (rate (1-e^{-kn/m})^k); chase with the exact join if the
     consumer needs exactness — the point is the probe volume that
-    reaches that join is a fraction of the table."""
+    reaches that join is a fraction of the table. Both sides get the
+    same ``(m_bits, k, tag)``, so they cannot disagree."""
     bitmap = bloom_bitmap(build, build_key, m_bits, k, tag)
     return (
         probe.crossJoin(F.broadcast(bitmap))
         .filter(bloom_pass_flag(F.col(probe_key), m_bits, k, tag))
-        .drop("bloom_words", "bloom_bits_set", "bloom_n_keys", "bloom_m_bits")
+        .drop("bloom_words", "bloom_bits_set", "bloom_n_keys", "bloom_params")
     )

@@ -51,15 +51,6 @@ def grid_coord(col: Column, mn: float, mx: float, bits: int) -> Column:
     return F.greatest(F.lit(0).cast("long"), F.least(F.lit((1 << bits) - 1).cast("long"), scaled))
 
 
-def grid_coord_sql(expr: str, mn: float, mx: float, bits: int) -> str:
-    cells = float((1 << bits) - 1)
-    if mx <= mn:
-        return "CAST(0 AS BIGINT)"
-    top = (1 << bits) - 1
-    scaled = f"CAST(floor((CAST({expr} AS DOUBLE) - {mn!r}) * {cells!r} / {(mx - mn)!r}) AS BIGINT)"
-    return f"greatest(CAST(0 AS BIGINT), least(CAST({top} AS BIGINT), {scaled}))"
-
-
 def interleave_bits(coords: Sequence[Column], bits: int) -> Column:
     """Morton-interleave ``coords`` (each already in [0, 2^bits)) into one
     long: output bit ``b*n + i`` is bit ``b`` of coordinate ``i``."""

@@ -1,28 +1,18 @@
-"""Multimodal (image/audio/video) column plumbing.
+"""Audio column plumbing over opaque ``binary`` payloads.
 
-Media are opaque ``binary`` columns with a typed metadata struct
-(modality, mime, width/height/duration, …) — the columnar pattern for
-multimodal training data. Both the Spark-side plumbing (schemas, batch
-iteration via mapInPandas, partition sizing) AND the codecs are real:
-from-spec stdlib+numpy implementations of netpbm/BMP raster decode,
-PNG (zlib inflate via stdlib; every spec bit depth 1/2/4/8/16,
-non-interlaced AND Adam7-interlaced),
-RIFF/WAVE audio (PCM + float, stats, resample), MJPEG-in-AVI frame
-sampling here, and JPEG — baseline sequential AND progressive SOF2
-(huffman, subsampling, restart markers, spectral selection +
-successive approximation, plus matching encoders for hermetic
-roundtrips) — in :mod:`.jpeg`. No external codec libraries are used
-or needed. Formats outside those envelopes
-(lossless/arithmetic/hierarchical JPEG, inter-frame video codecs) are
-STRICT GATES — and PERMANENT NON-GOALS (COVERAGE.md): they raise a
-typed NotImplementedError rather than guessing, and corrupt payloads
-always fail with ValueError at the decode boundary (fuzz-pinned in
-tests/test_jpeg.py, test_gif.py, test_video.py).
+Media are ``binary`` columns with a typed metadata struct (modality,
+mime, width/height/duration). The RIFF/WAVE codec here (PCM, IEEE
+float and G.711 mu-law/A-law) is a from-spec stdlib+numpy
+implementation; no codec library is used or needed. Compressed audio
+(ADPCM, mp3-in-wav) is a STRICT GATE: it raises a typed
+NotImplementedError rather than guessing, and corrupt payloads always
+fail with ValueError at the decode boundary.
+
+No workload reaches these operators; ``tests/test_audio.py`` keeps
+them (see the allow-list in ``tests/test_registry_lint.py``).
 
 Scale notes: decode/feature-extract runs as mapInPandas over Arrow
-batches — per-partition streaming, no shuffle; partition size should be
-tuned so a batch of decoded frames fits executor memory
-(spark.sql.files.maxPartitionBytes down-tuned for media tables).
+batches — per-partition streaming, no shuffle.
 """
 
 from __future__ import annotations
@@ -31,7 +21,6 @@ from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 MEDIA_META = T.StructType(
@@ -51,578 +40,6 @@ MEDIA_SCHEMA = T.StructType(
         T.StructField("meta", MEDIA_META, True),
     ]
 )
-
-
-def synthesize_media_table(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Build a media-shaped table from the documents table: payload =
-    utf-8 bytes of the text (an opaque blob as far as the pipeline is
-    concerned), metadata derived deterministically."""
-    return df.select(
-        F.col(id_col).alias("media_id"),
-        F.encode(F.col(text_col), "utf-8").alias("payload"),
-        F.struct(
-            F.lit("image").alias("modality"),
-            F.lit("image/fake").alias("mime"),
-            (F.length(F.col(text_col)) % 640 + 32).cast("int").alias("width"),
-            (F.length(F.col(text_col)) % 480 + 32).cast("int").alias("height"),
-            F.lit(None).cast("long").alias("duration_ms"),
-        ).alias("meta"),
-    )
-
-
-def _fake_decode(payload: bytes, width: int, height: int) -> list[float]:
-    """Deterministic stand-in for an image decoder: 8 'pixel statistics'
-    derived from payload bytes. Replace with PIL/torchvision in prod."""
-    if payload is None:
-        return [0.0] * 8
-    n = len(payload)
-    s = sum(payload[:256])
-    return [
-        float(n),
-        float(s % 997),
-        float(width),
-        float(height),
-        float(payload[0] if n else 0),
-        float(payload[-1] if n else 0),
-        float(s % 31),
-        float(n % 13),
-    ]
-
-
-FEATURE_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("features", T.ArrayType(T.DoubleType()), False),
-    ]
-)
-
-
-def extract_features(media: DataFrame, strict: bool = False) -> DataFrame:
-    """Decode + feature-extract via mapInPandas (Arrow-batched).
-
-    ``strict=True`` raises NotImplementedError — the marker that a real
-    codec must be plugged in; ``strict=False`` runs the deterministic
-    fake so the distributed plumbing (batching, schema, partitioning) is
-    exercised end to end.
-    """
-
-    def _features(payload, meta) -> list[float]:
-        # real path first: any payload the from-spec codecs decode gets
-        # genuine pixel statistics; opaque blobs keep the deterministic
-        # fake so plumbing tests stay format-independent
-        b = bytes(payload or b"")
-        try:
-            w, h, c, arr = decode_raster(b)
-        except (ValueError, NotImplementedError):
-            return _fake_decode(payload, meta["width"], meta["height"])
-        import numpy as np
-
-        flat = arr.reshape(-1, c).astype(np.float64)
-        mean = flat.mean(axis=0)
-        return [
-            float(w),
-            float(h),
-            float(c),
-            float(mean[0]),
-            float(mean[min(1, c - 1)]),
-            float(mean[min(2, c - 1)]),
-            float(flat.std(axis=0).mean()),
-            float(arr.size),
-        ]
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if strict:
-            raise NotImplementedError(
-                "media decode requires an image/audio codec; not available "
-                "in this environment — plug a decoder into extract_features()"
-            )
-        for pdf in it:
-            feats = [
-                _features(p, m)
-                for p, m in zip(pdf["payload"], pdf["meta"])
-            ]
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"], "features": feats}
-            )
-
-    return media.mapInPandas(batches, schema=FEATURE_SCHEMA)
-
-
-def resize(
-    media: DataFrame, width: int = 224, height: int = 224, strict: bool = False
-) -> DataFrame:
-    """Image resize via mapInPandas — same media schema out, metadata
-    updated to the target dimensions.
-
-    Payloads the from-spec codecs decode get a REAL nearest-neighbor
-    resize (re-encoded as netpbm, the uncompressed interchange format —
-    resize_nearest's path); opaque blobs keep the deterministic fake
-    (payload truncated/padded to ``width*height // 64`` bytes, a
-    stand-in with the real operator's cost shape) so plumbing tests
-    stay format-independent. Swap PIL/cv2 into the same loop in prod.
-    """
-    import numpy as np
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if strict:
-            raise NotImplementedError("resize requires an image codec")
-        target = max(1, width * height // 64)
-        for pdf in it:
-            payloads, metas = [], []
-            for p, m in zip(pdf["payload"], pdf["meta"]):
-                b = bytes(p or b"")
-                try:
-                    w, h, c, arr = decode_raster(b)
-                    yi = np.minimum((np.arange(height) * h) // height, h - 1)
-                    xi = np.minimum((np.arange(width) * w) // width, w - 1)
-                    payloads.append(encode_ppm(arr[yi][:, xi]))
-                    mime = (
-                        "image/x-portable-graymap"
-                        if c in (1, 2)  # alpha dropped by encode_ppm
-                        else "image/x-portable-pixmap"
-                    )
-                    metas.append(
-                        {**m, "mime": mime, "width": width, "height": height}
-                    )
-                except (ValueError, NotImplementedError):
-                    payloads.append((b * (target // max(len(b), 1) + 1))[:target])
-                    metas.append({**m, "width": width, "height": height})
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"], "payload": payloads, "meta": metas}
-            )
-
-    return media.mapInPandas(batches, schema=MEDIA_SCHEMA)
-
-
-def frame_sample(media: DataFrame, every_ms: int = 1000, strict: bool = False) -> DataFrame:
-    """Video frame sampling stub: emits (media_id, frame_idx, frame_bytes)
-    rows. Deterministic fake: one 'frame' per metadata duration bucket."""
-    if strict:
-        raise NotImplementedError("frame sampling requires a video codec")
-    n_frames = F.coalesce(
-        (F.col("meta.duration_ms") / every_ms).cast("int"), F.lit(1)
-    )
-    return media.select(
-        "media_id",
-        F.explode(F.sequence(F.lit(0), F.greatest(n_frames - 1, F.lit(0)))).alias(
-            "frame_idx"
-        ),
-        F.col("payload").alias("frame_bytes"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# REAL decoders — netpbm P5/P6 and 24-bit BMP parse with numpy alone;
-# PNG (8/16-bit, non-interlaced AND Adam7-interlaced, all five scanline
-# filters, color types 0/2/3/4/6) decodes with stdlib zlib + numpy
-# unfiltering; JPEG (baseline sequential incl. subsampling + restart
-# markers, and progressive SOF2) decodes via the from-spec codec in
-# operators/jpeg.py. Inter-frame video and lossless/arithmetic JPEG
-# remain gated behind strict-NotImplementedError.
-# ---------------------------------------------------------------------------
-
-
-def _parse_netpbm(buf: bytes):
-    """Decode binary PGM (P5) / PPM (P6) -> (w, h, channels, HxWxC uint8)."""
-    import numpy as np
-
-    if not buf or buf[:1] != b"P" or buf[1:2] not in (b"5", b"6"):
-        raise ValueError("not a binary netpbm payload")
-    channels = 1 if buf[1:2] == b"5" else 3
-    # header tokens: magic, width, height, maxval — whitespace separated,
-    # '#' comments run to end-of-line
-    pos, tokens = 2, []
-    while len(tokens) < 3:
-        while pos < len(buf) and buf[pos : pos + 1].isspace():
-            pos += 1
-        if buf[pos : pos + 1] == b"#":
-            while pos < len(buf) and buf[pos : pos + 1] != b"\n":
-                pos += 1
-            continue
-        start = pos
-        while pos < len(buf) and not buf[pos : pos + 1].isspace():
-            pos += 1
-        tokens.append(int(buf[start:pos]))
-    pos += 1  # single whitespace after maxval
-    w, h, maxval = tokens
-    if maxval > 255:
-        raise ValueError("16-bit netpbm unsupported")
-    need = w * h * channels
-    raster = np.frombuffer(buf, dtype=np.uint8, count=need, offset=pos)
-    return w, h, channels, raster.reshape(h, w, channels)
-
-
-def _parse_bmp24(buf: bytes):
-    """Decode an uncompressed 24-bit BMP -> (w, h, 3, HxWx3 uint8, RGB)."""
-    import struct
-
-    import numpy as np
-
-    if not buf or buf[:2] != b"BM":
-        raise ValueError("not a BMP payload")
-    data_off = struct.unpack_from("<I", buf, 10)[0]
-    hdr_sz, w, h = struct.unpack_from("<Iii", buf, 14)
-    planes, bpp = struct.unpack_from("<HH", buf, 26)
-    compression = struct.unpack_from("<I", buf, 30)[0]
-    if bpp != 24 or compression != 0:
-        raise ValueError("only uncompressed 24-bit BMP supported")
-    flip = h > 0  # positive height = bottom-up row order
-    h = abs(h)
-    row_bytes = (w * 3 + 3) & ~3  # rows padded to 4-byte boundaries
-    raster = np.frombuffer(
-        buf, dtype=np.uint8, count=row_bytes * h, offset=data_off
-    ).reshape(h, row_bytes)[:, : w * 3].reshape(h, w, 3)
-    if flip:
-        raster = raster[::-1]
-    return w, h, 3, raster[:, :, ::-1]  # BGR -> RGB
-
-
-_PNG_SIG = b"\x89PNG\r\n\x1a\n"
-
-
-def _png_chunks(buf: bytes):
-    """Yield (type, data) for each chunk; stops after IEND."""
-    import struct
-
-    pos = len(_PNG_SIG)
-    while pos + 8 <= len(buf):
-        (length,) = struct.unpack_from(">I", buf, pos)
-        ctype = buf[pos + 4 : pos + 8]
-        data = buf[pos + 8 : pos + 8 + length]
-        yield ctype, data
-        pos += 12 + length  # length + type + data + crc
-        if ctype == b"IEND":
-            break
-
-
-def _png_unfilter(raw, h: int, stride: int, bpp: int):
-    """Reverse PNG scanline filtering (spec filters 0-4) -> h x stride
-    uint8. ``raw`` is the decompressed stream: h rows of (1 filter byte
-    + stride pixel bytes). Filter math is defined on bytes mod 256.
-
-    None/Up rows are whole-row numpy ops; Sub is a per-lane cumsum
-    (out[i] = raw[i] + out[i-bpp] telescopes within each i%bpp lane);
-    Average/Paeth depend on the just-decoded left neighbor, so they walk
-    the row — still vectorized across channels per pixel.
-    """
-    import numpy as np
-
-    raw = np.frombuffer(raw, dtype=np.uint8).reshape(h, 1 + stride)
-    out = np.zeros((h, stride), dtype=np.uint8)
-    for y in range(h):
-        ftype = int(raw[y, 0])
-        line = raw[y, 1:]
-        prev = out[y - 1] if y else np.zeros(stride, dtype=np.uint8)
-        if ftype == 0:  # None
-            out[y] = line
-        elif ftype == 1:  # Sub
-            lanes = line.reshape(-1, bpp).astype(np.uint64)
-            out[y] = (
-                np.cumsum(lanes, axis=0, dtype=np.uint64) % 256
-            ).astype(np.uint8).reshape(-1)
-        elif ftype == 2:  # Up
-            out[y] = line + prev  # uint8 wraps = mod 256
-        elif ftype == 3:  # Average
-            o = out[y]
-            for x in range(stride):
-                left = int(o[x - bpp]) if x >= bpp else 0
-                o[x] = (int(line[x]) + ((left + int(prev[x])) >> 1)) & 0xFF
-        elif ftype == 4:  # Paeth
-            o = out[y]
-            for x in range(stride):
-                a = int(o[x - bpp]) if x >= bpp else 0
-                b = int(prev[x])
-                c = int(prev[x - bpp]) if x >= bpp else 0
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-                o[x] = (int(line[x]) + pred) & 0xFF
-        else:
-            raise ValueError(f"unknown PNG filter type {ftype}")
-    return out
-
-
-def _png_unpack_sub8(rows, w: int, depth: int):
-    """h x stride unfiltered bytes -> h x w x 1 samples for bit depths
-    1/2/4 (PNG spec §7.2: samples pack MSB-first within a byte; row ends
-    are zero-padded to the byte boundary). Pure numpy: unpack to bits,
-    regroup ``depth`` bits per sample, dot with place weights."""
-    import numpy as np
-
-    h = rows.shape[0]
-    bits = np.unpackbits(rows, axis=1)
-    vals = bits[:, : w * depth].reshape(h, w, depth)
-    weights = (1 << np.arange(depth - 1, -1, -1)).astype(np.uint8)
-    return (vals * weights).sum(axis=2, dtype=np.uint16).astype(np.uint8).reshape(
-        h, w, 1
-    )
-
-
-# Adam7 pass grid: (x_start, y_start, x_step, y_step) per PNG spec §8.2
-_ADAM7 = (
-    (0, 0, 8, 8),
-    (4, 0, 8, 8),
-    (0, 4, 4, 8),
-    (2, 0, 4, 4),
-    (0, 2, 2, 4),
-    (1, 0, 2, 2),
-    (0, 1, 1, 2),
-)
-
-
-def _parse_png(buf: bytes):
-    """Decode a PNG at any spec bit depth (1/2/4/8/16), non-interlaced
-    OR Adam7-interlaced (stdlib zlib + numpy unfiltering; PNG spec is
-    public) -> (w, h, channels, HxWxC uint8).
-
-    Color types: 0 gray, 2 RGB, 3 palette (expanded to RGB), 4
-    gray+alpha, 6 RGBA. Adam7 decodes each of the 7 reduced images with
-    its own scanline filtering, then scatters into the strided pixel
-    grid. 16-bit samples (big-endian) downconvert to 8-bit by high
-    byte; 1/2/4-bit rows bit-unpack after unfiltering, gray samples
-    rescale so the max code maps to 255 exactly.
-    """
-    import struct
-    import zlib
-
-    import numpy as np
-
-    if not buf.startswith(_PNG_SIG):
-        raise ValueError("not a PNG payload")
-    ihdr = palette = None
-    idat = bytearray()
-    for ctype, data in _png_chunks(bytes(buf)):
-        if ctype == b"IHDR":
-            ihdr = struct.unpack(">IIBBBBB", data)
-        elif ctype == b"PLTE":
-            palette = np.frombuffer(data, dtype=np.uint8).reshape(-1, 3)
-        elif ctype == b"IDAT":
-            idat.extend(data)
-    if ihdr is None:
-        raise ValueError("PNG missing IHDR")
-    w, h, depth, color, _comp, _filt, interlace = ihdr
-    if depth not in (1, 2, 4, 8, 16):
-        raise ValueError(f"invalid PNG bit depth {depth}")
-    channels = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}.get(color)
-    if channels is None:
-        raise ValueError(f"unknown PNG color type {color}")
-    if depth == 16 and color == 3:
-        raise ValueError("16-bit palette PNG is not a valid combination")
-    if depth < 8 and color not in (0, 3):
-        raise ValueError(
-            f"bit depth {depth} is only valid for gray/palette PNG (spec §11.2.2)"
-        )
-    # PNG filters operate on BYTES: bpp (the filter's left-neighbor
-    # distance) is bytes per pixel for depths >= 8 and 1 for packed
-    # sub-8-bit rows (spec §9.2), so every depth reuses the same
-    # unfiltering. 16-bit samples are big-endian and downconvert to
-    # 8-bit by keeping the high byte (identical to value // 257 within
-    # rounding); 1/2/4-bit rows bit-unpack after unfiltering.
-    sub8 = depth < 8
-    bpp = 1 if sub8 else channels * (depth // 8)
-    raw = zlib.decompress(bytes(idat))
-    stride = (w * channels * depth + 7) // 8
-    out_c = 1 if sub8 else bpp
-    if interlace == 0:
-        if len(raw) != h * (1 + stride):
-            raise ValueError("PNG pixel data length mismatch")
-        rows = _png_unfilter(raw, h, stride, bpp)
-        arr = _png_unpack_sub8(rows, w, depth) if sub8 else rows.reshape(h, w, bpp)
-    elif interlace == 1:  # Adam7
-        arr = np.zeros((h, w, out_c), dtype=np.uint8)
-        pos = 0
-        for x0, y0, dx, dy in _ADAM7:
-            pw = (w - x0 + dx - 1) // dx
-            ph = (h - y0 + dy - 1) // dy
-            if pw <= 0 or ph <= 0:
-                continue  # empty pass for small images: no bytes at all
-            pstride = (pw * channels * depth + 7) // 8
-            need = ph * (1 + pstride)
-            part = raw[pos : pos + need]
-            if len(part) != need:
-                raise ValueError("PNG interlaced pass data truncated")
-            pos += need
-            rows = _png_unfilter(part, ph, pstride, bpp)
-            sub = (
-                _png_unpack_sub8(rows, pw, depth)
-                if sub8
-                else rows.reshape(ph, pw, bpp)
-            )
-            arr[y0::dy, x0::dx] = sub
-        if pos != len(raw):
-            raise ValueError("PNG pixel data length mismatch")
-    else:
-        raise ValueError(f"unknown PNG interlace method {interlace}")
-    if depth == 16:
-        arr = arr[:, :, 0::2]  # big-endian high byte per sample
-    if color == 3:
-        if palette is None:
-            raise ValueError("palette PNG missing PLTE")
-        idx = arr.reshape(h, w)
-        if int(idx.max(initial=0)) >= len(palette):
-            raise ValueError("PNG palette index out of range")
-        arr = palette[idx]
-        channels = 3
-    elif sub8:
-        # expand gray samples to full 8-bit range: max sample value
-        # (2^depth - 1) maps to 255 exactly (255 = 85*3 = 17*15)
-        arr = arr * np.uint8(255 // ((1 << depth) - 1))
-    return w, h, channels, arr
-
-
-def _png_pack_sub8(samples, depth: int) -> bytes:
-    """h x w samples (< 2^depth) -> filter-0 scanlines with samples
-    packed MSB-first, rows zero-padded to the byte boundary (the
-    encode twin of _png_unpack_sub8)."""
-    import numpy as np
-
-    h, w = samples.shape
-    bits = (
-        (samples[:, :, None].astype(np.uint8) >> np.arange(depth - 1, -1, -1)) & 1
-    ).reshape(h, w * depth)
-    stride = (w * depth + 7) // 8
-    pad = stride * 8 - w * depth
-    if pad:
-        bits = np.concatenate([bits, np.zeros((h, pad), dtype=bits.dtype)], axis=1)
-    rows = np.packbits(bits.astype(np.uint8), axis=1)
-    return np.concatenate(
-        [np.zeros((h, 1), dtype=np.uint8), rows], axis=1
-    ).tobytes()
-
-
-def encode_png(
-    arr, interlace: bool = False, depth: int = 8, palette=None
-) -> bytes:
-    """HxWxC array -> PNG payload (filter 0, one zlib stream) for
-    roundtrip tests; C in {1: gray, 2: gray+alpha, 3: rgb, 4: rgba}.
-    ``interlace=True`` emits the Adam7 pass sequence; ``depth=16``
-    takes a uint16 array and writes big-endian 16-bit samples;
-    ``depth`` 1/2/4 takes HxWx1 sample values < 2^depth (gray, or
-    palette indices when ``palette`` — an Nx3 uint8 array — is given)
-    and bit-packs rows MSB-first (the hermetic twins for every decode
-    path, sub-8-bit included)."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    h, w, c = arr.shape
-    if palette is not None:
-        if c != 1:
-            raise ValueError("palette PNG takes HxWx1 index arrays")
-        color = 3
-    else:
-        color = {1: 0, 2: 4, 3: 2, 4: 6}[c]
-    sub8 = depth in (1, 2, 4)
-    if depth == 8:
-        byte_arr = np.asarray(arr, dtype=np.uint8)
-    elif depth == 16:
-        a16 = np.asarray(arr, dtype=np.uint16)
-        byte_arr = (
-            a16.astype(">u2").view(np.uint8).reshape(h, w, c * 2)
-        )
-    elif sub8:
-        if c != 1:
-            raise ValueError("sub-8-bit PNG is gray/palette only (1 channel)")
-        byte_arr = np.asarray(arr, dtype=np.uint8)
-        if int(byte_arr.max(initial=0)) >= (1 << depth):
-            raise ValueError(f"sample value out of range for depth {depth}")
-    else:
-        raise ValueError("encode_png writes depth 1/2/4/8 or 16")
-    bpp = byte_arr.shape[2]
-
-    def chunk(ctype: bytes, data: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(data))
-            + ctype
-            + data
-            + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF)
-        )
-
-    ihdr = struct.pack(
-        ">IIBBBBB", w, h, depth, color, 0, 0, 1 if interlace else 0
-    )
-    if interlace:
-        parts = []
-        for x0, y0, dx, dy in _ADAM7:
-            sub = byte_arr[y0::dy, x0::dx]
-            ph, pw = sub.shape[:2]
-            if ph == 0 or pw == 0:
-                continue
-            if sub8:
-                parts.append(_png_pack_sub8(sub.reshape(ph, pw), depth))
-            else:
-                parts.append(
-                    np.concatenate(
-                        [
-                            np.zeros((ph, 1), dtype=np.uint8),
-                            np.ascontiguousarray(sub).reshape(ph, pw * bpp),
-                        ],
-                        axis=1,
-                    ).tobytes()
-                )
-        raw = b"".join(parts)
-    elif sub8:
-        raw = _png_pack_sub8(byte_arr.reshape(h, w), depth)
-    else:
-        raw = np.concatenate(
-            [np.zeros((h, 1), dtype=np.uint8), byte_arr.reshape(h, w * bpp)],
-            axis=1,
-        ).tobytes()
-    chunks = _PNG_SIG + chunk(b"IHDR", ihdr)
-    if palette is not None:
-        chunks += chunk(b"PLTE", np.asarray(palette, dtype=np.uint8).tobytes())
-    return (
-        chunks
-        + chunk(b"IDAT", zlib.compress(raw, 6))
-        + chunk(b"IEND", b"")
-    )
-
-
-def decode_raster(buf: bytes):
-    """(w, h, channels, HxWxC uint8) for any supported payload.
-
-    Malformed payloads always raise ValueError (or NotImplementedError
-    for recognized-but-gated formats): low-level parse faults from
-    corrupt bytes — bad offsets, zlib errors, short reads — are
-    converted at this boundary so a poisoned corpus row fails typed
-    (pinned by the codec fuzz test)."""
-    import struct
-    import zlib
-
-    try:
-        if buf and buf[:2] in (b"P5", b"P6"):
-            return _parse_netpbm(buf)
-        if buf and buf[:2] == b"BM":
-            return _parse_bmp24(buf)
-        if buf and bytes(buf[:8]) == _PNG_SIG:
-            return _parse_png(buf)
-        if buf and bytes(buf[:2]) == b"\xff\xd8":
-            from etl_lealone_spark.operators.jpeg import decode_jpeg
-
-            return decode_jpeg(bytes(buf))
-        if buf and bytes(buf[:6]) in (b"GIF87a", b"GIF89a"):
-            return _parse_gif(bytes(buf))
-    except (KeyError, IndexError, struct.error, zlib.error) as e:
-        raise ValueError(f"corrupt image payload: {type(e).__name__} {e}") from e
-    raise NotImplementedError(
-        "unknown image format (PIL/cv2 in prod; JPEG/PNG/GIF/BMP/netpbm "
-        "decode natively here)"
-    )
-
-
-def encode_ppm(arr) -> bytes:
-    """HxWxC uint8 -> binary netpbm payload (P5 gray / P6 rgb).
-    netpbm has no alpha: 2/4-channel input (gray+alpha / RGBA from PNG
-    decode) drops the alpha plane — writing it under a P6 header would
-    be a silently corrupt payload."""
-    if arr.shape[2] == 2:
-        arr = arr[:, :, :1]
-    elif arr.shape[2] == 4:
-        arr = arr[:, :, :3]
-    h, w, c = arr.shape
-    magic = b"P5" if c == 1 else b"P6"
-    return magic + f"\n{w} {h}\n255\n".encode() + arr.tobytes()
 
 
 # ---------------------------------------------------------------------------
@@ -702,8 +119,7 @@ def _parse_wav(buf: bytes):
     float32/64 (format 3), and G.711 mu-law/A-law (formats 7/6 — the
     telephony-corpus encodings); WAVE_FORMAT_EXTENSIBLE resolves
     through its sub-format tag. Anything else (ADPCM, mp3-in-wav)
-    raises; corrupt payloads always raise ValueError (same boundary
-    contract as decode_raster)."""
+    raises; corrupt payloads always raise ValueError."""
     import struct
 
     try:
@@ -839,8 +255,7 @@ def encode_wav(
 def audio_stats_features(media: DataFrame) -> DataFrame:
     """REAL WAV decode + per-clip signal statistics: (media_id,
     sample_rate, channels, n_frames, duration_ms, rms, peak,
-    zero_crossing_rate). Map-only Arrow pass — the audio analog of
-    image_stats_features."""
+    zero_crossing_rate). Map-only Arrow pass."""
     import numpy as np
 
     schema = T.StructType(
@@ -914,388 +329,3 @@ def audio_resample(media: DataFrame, target_rate: int = 16000) -> DataFrame:
 
     return media.mapInPandas(batches, schema=MEDIA_SCHEMA)
 
-
-def _gif_lzw_decode(data: bytes, min_code_size: int, n_pixels: int):
-    """GIF-variant LZW decode -> list of palette indices (spec 89a
-    appendix F: variable code width 3..12 bits, clear + EOI codes,
-    dictionary rebuilt on clear)."""
-    clear = 1 << min_code_size
-    eoi = clear + 1
-    out: list[int] = []
-    # bit cursor over the concatenated sub-block data, LSB-first
-    acc = nbits = pos = 0
-    code_size = min_code_size + 1
-    table: list[bytes] = [bytes([i]) for i in range(clear)] + [b"", b""]
-    prev: bytes | None = None
-    while len(out) < n_pixels:
-        while nbits < code_size:
-            if pos >= len(data):
-                return out  # truncated stream: emit what we have
-            acc |= data[pos] << nbits
-            nbits += 8
-            pos += 1
-        code = acc & ((1 << code_size) - 1)
-        acc >>= code_size
-        nbits -= code_size
-        if code == clear:
-            table = [bytes([i]) for i in range(clear)] + [b"", b""]
-            code_size = min_code_size + 1
-            prev = None
-            continue
-        if code == eoi:
-            break
-        if code < len(table):
-            entry = table[code]
-        elif code == len(table) and prev is not None:
-            entry = prev + prev[:1]  # the KwKwK case
-        else:
-            raise ValueError("corrupt GIF LZW stream")
-        out.extend(entry)
-        if prev is not None and len(table) < 4096:
-            table.append(prev + entry[:1])
-            if len(table) == (1 << code_size) and code_size < 12:
-                code_size += 1
-        prev = entry
-    return out
-
-
-def _gif_lzw_encode(indices, min_code_size: int) -> bytes:
-    """GIF-variant LZW encode (the writer half, for hermetic tests)."""
-    clear = 1 << min_code_size
-    eoi = clear + 1
-    out = bytearray()
-    acc = nbits = 0
-
-    def put(code: int, size: int):
-        nonlocal acc, nbits
-        acc |= code << nbits
-        nbits += size
-        while nbits >= 8:
-            out.append(acc & 0xFF)
-            acc >>= 8
-            nbits -= 8
-
-    table = {bytes([i]): i for i in range(clear)}
-    next_code = eoi + 1
-    code_size = min_code_size + 1
-    put(clear, code_size)
-    w = b""
-    for idx in bytes(indices):
-        wk = w + bytes([idx])
-        if wk in table:
-            w = wk
-            continue
-        put(table[w], code_size)
-        if next_code < 4096:
-            table[wk] = next_code
-            if next_code == (1 << code_size) and code_size < 12:
-                code_size += 1
-            next_code += 1
-        else:  # table full: emit clear and restart (spec-sanctioned)
-            put(clear, code_size)
-            table = {bytes([i]): i for i in range(clear)}
-            next_code = eoi + 1
-            code_size = min_code_size + 1
-        w = bytes([idx])
-    if w:
-        put(table[w], code_size)
-    put(eoi, code_size)
-    if nbits:
-        out.append(acc & 0xFF)
-    return bytes(out)
-
-
-def _parse_gif(buf: bytes):
-    """Decode the FIRST frame of a GIF87a/89a -> (w, h, 3, HxWx3 uint8).
-
-    Global/local color tables, interlacing, and the 89a extension
-    blocks are handled; animation frames beyond the first are ignored
-    (frame iteration belongs to the video path)."""
-    import struct
-
-    if buf[:6] not in (b"GIF87a", b"GIF89a"):
-        raise ValueError("not a GIF payload")
-    try:
-        return _parse_gif_body(buf)
-    except (IndexError, struct.error) as e:
-        raise ValueError(f"GIF payload truncated: {e}") from e
-
-
-def _parse_gif_body(buf: bytes):
-    import struct
-
-    import numpy as np
-
-    sw, sh, flags, _bg, _ar = struct.unpack_from("<HHBBB", buf, 6)
-    pos = 13
-    global_pal = None
-    if flags & 0x80:
-        n = 2 << (flags & 7)
-        global_pal = np.frombuffer(buf, np.uint8, n * 3, pos).reshape(-1, 3)
-        pos += n * 3
-    while pos < len(buf):
-        b0 = buf[pos]
-        if b0 == 0x3B:  # trailer
-            break
-        if b0 == 0x21:  # extension: label + sub-blocks
-            pos += 2
-            while buf[pos]:
-                pos += 1 + buf[pos]
-            pos += 1
-            continue
-        if b0 != 0x2C:
-            raise ValueError(f"unknown GIF block 0x{b0:02x}")
-        left, top, w, h, iflags = struct.unpack_from("<HHHHB", buf, pos + 1)
-        pos += 10
-        pal = global_pal
-        if iflags & 0x80:
-            n = 2 << (iflags & 7)
-            pal = np.frombuffer(buf, np.uint8, n * 3, pos).reshape(-1, 3)
-            pos += n * 3
-        if pal is None:
-            raise ValueError("GIF image without a color table")
-        min_code = buf[pos]
-        pos += 1
-        data = bytearray()
-        while buf[pos]:
-            ln = buf[pos]
-            data += buf[pos + 1 : pos + 1 + ln]
-            pos += 1 + ln
-        pos += 1
-        idx = _gif_lzw_decode(bytes(data), min_code, w * h)
-        if len(idx) < w * h:
-            raise ValueError("GIF pixel data truncated")
-        grid = np.asarray(idx, dtype=np.uint8).reshape(h, w)
-        if iflags & 0x40:  # interlaced: rows arrive in 4 passes
-            order = [y for y in range(0, h, 8)] + [y for y in range(4, h, 8)] \
-                + [y for y in range(2, h, 4)] + [y for y in range(1, h, 2)]
-            de = np.empty_like(grid)
-            de[order] = grid
-            grid = de
-        return w, h, 3, pal[grid]
-    raise ValueError("GIF has no image block")
-
-
-def encode_gif(arr, interlace: bool = False) -> bytes:
-    """HxWx3 uint8 (<=256 distinct colors) -> GIF89a bytes for
-    roundtrip tests; GIF is palette-limited so callers quantize first."""
-    import struct
-
-    import numpy as np
-
-    h, w, _ = arr.shape
-    flat = arr.reshape(-1, 3)
-    pal, inv = np.unique(flat, axis=0, return_inverse=True)
-    if len(pal) > 256:
-        raise ValueError("encode_gif needs <=256 distinct colors")
-    depth = max(1, int(len(pal) - 1).bit_length())
-    pal_full = np.zeros((1 << depth, 3), dtype=np.uint8)
-    pal_full[: len(pal)] = pal
-    grid = inv.reshape(h, w)
-    if interlace:
-        order = [y for y in range(0, h, 8)] + [y for y in range(4, h, 8)] \
-            + [y for y in range(2, h, 4)] + [y for y in range(1, h, 2)]
-        grid = grid[order]
-    min_code = max(2, depth)
-    lzw = _gif_lzw_encode(grid.reshape(-1).astype(np.uint8).tobytes(), min_code)
-    out = bytearray(b"GIF89a")
-    out += struct.pack("<HHBBB", w, h, 0x80 | (depth - 1), 0, 0)
-    out += pal_full.tobytes()
-    out += b"\x2c" + struct.pack("<HHHHB", 0, 0, w, h, 0x40 if interlace else 0)
-    out.append(min_code)
-    for i in range(0, len(lzw), 255):
-        block = lzw[i : i + 255]
-        out.append(len(block))
-        out += block
-    out += b"\x00\x3b"
-    return bytes(out)
-
-
-# ---------------------------------------------------------------------------
-# REAL video: MJPEG-in-AVI. The AVI RIFF container is public spec and
-# each '00dc' chunk is a standalone baseline JPEG, so frame splitting +
-# per-frame decode compose from the RIFF walk below and operators/jpeg.
-# Inter-frame codecs (h264 etc.) stay gated — motion decode needs real
-# libs.
-# ---------------------------------------------------------------------------
-
-
-def _parse_avi_mjpeg(buf: bytes):
-    """Decode a minimal MJPEG AVI -> (usec_per_frame, [jpeg_bytes, ...]).
-
-    Walks the RIFF tree: 'avih' gives the frame period, the 'movi' LIST
-    holds one '00dc'/'00db' chunk per frame (each a complete JPEG).
-    Corrupt payloads raise ValueError (same boundary contract as
-    decode_raster/_parse_wav)."""
-    import struct
-
-    if len(buf) < 12 or buf[:4] != b"RIFF" or buf[8:12] != b"AVI ":
-        raise ValueError("not a RIFF/AVI payload")
-    try:
-        return _parse_avi_mjpeg_impl(buf)
-    except (IndexError, struct.error, RecursionError) as e:
-        raise ValueError(f"corrupt AVI payload: {type(e).__name__} {e}") from e
-
-
-def _parse_avi_mjpeg_impl(buf: bytes):
-    import struct
-
-    usec_per_frame = 33333  # 30 fps default if avih is absent
-    frames: list[bytes] = []
-
-    def walk(pos: int, end: int):
-        nonlocal usec_per_frame
-        end = min(end, len(buf))  # corrupt LIST lengths can't run past EOF
-        while pos + 8 <= end:
-            cid = buf[pos : pos + 4]
-            (clen,) = struct.unpack_from("<I", buf, pos + 4)
-            body_start = pos + 8
-            if cid == b"LIST":
-                walk(body_start + 4, body_start + clen)
-            elif cid == b"avih":
-                (usec_per_frame,) = struct.unpack_from("<I", buf, body_start)
-            elif cid in (b"00dc", b"00db") and clen:
-                frames.append(buf[body_start : body_start + clen])
-            pos = body_start + clen + (clen & 1)  # word-aligned
-
-    walk(12, len(buf))
-    if not frames:
-        raise ValueError("AVI has no video frames")
-    for f in frames:
-        if f[:2] != b"\xff\xd8":
-            raise NotImplementedError(
-                "non-MJPEG AVI stream (inter-frame codecs need a real lib)"
-            )
-    return usec_per_frame, frames
-
-
-def encode_avi_mjpeg(jpeg_frames, fps: int = 10, width: int = 0, height: int = 0) -> bytes:
-    """[jpeg_bytes, ...] -> minimal spec-shaped MJPEG AVI (avih + one
-    'vids'/'MJPG' stream + movi '00dc' chunks) for hermetic tests."""
-    import struct
-
-    def chunk(cid: bytes, body: bytes) -> bytes:
-        return cid + struct.pack("<I", len(body)) + body + (b"\x00" if len(body) & 1 else b"")
-
-    def lst(kind: bytes, body: bytes) -> bytes:
-        return chunk(b"LIST", kind + body)
-
-    n = len(jpeg_frames)
-    usec = max(1, 1_000_000 // max(1, fps))
-    avih = struct.pack("<14I", usec, 0, 0, 0, n, 0, 1, 0, width, height, 0, 0, 0, 0)
-    strh = (
-        b"vids" + b"MJPG"
-        + struct.pack("<IHHIIIIIIII", 0, 0, 0, 0, 1, fps, 0, n, 0, 0xFFFFFFFF, 0)
-        + struct.pack("<4h", 0, 0, width, height)
-    )
-    strf = struct.pack("<IiiHH4sIiiII", 40, width, height, 1, 24, b"MJPG", 0, 0, 0, 0, 0)
-    hdrl = lst(b"hdrl", chunk(b"avih", avih) + lst(b"strl", chunk(b"strh", strh) + chunk(b"strf", strf)))
-    movi = lst(b"movi", b"".join(chunk(b"00dc", f) for f in jpeg_frames))
-    body = b"AVI " + hdrl + movi
-    return b"RIFF" + struct.pack("<I", len(body)) + body
-
-
-VIDEO_FRAME_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("frame_idx", T.IntegerType(), False),
-        T.StructField("ts_ms", T.LongType(), False),
-        T.StructField("frame_bytes", T.BinaryType(), False),
-    ]
-)
-
-
-def frame_sample_mjpeg(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """REAL video frame sampling for MJPEG AVI payloads: emits one
-    (media_id, frame_idx, ts_ms, frame_bytes) row per sampled frame —
-    frame_bytes is a standalone JPEG that decode_raster handles. The
-    sampler keeps the first frame at-or-after each ``every_ms`` tick
-    (the standard training-data keyframe grid). Map-only Arrow pass;
-    output size is bounded by duration/every_ms per clip, not by fps."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {k.name: [] for k in VIDEO_FRAME_SCHEMA}
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                usec, frames = _parse_avi_mjpeg(bytes(p))
-                next_tick = 0.0
-                for i, f in enumerate(frames):
-                    ts_ms = i * usec / 1000.0
-                    if ts_ms + 1e-9 >= next_tick:
-                        rows["media_id"].append(mid)
-                        rows["frame_idx"].append(i)
-                        rows["ts_ms"].append(int(ts_ms))
-                        rows["frame_bytes"].append(f)
-                        # Advance PAST the emitted frame, not by one
-                        # fixed step: after a frame lands several ticks
-                        # late (low fps), a single += every_ms would
-                        # leave next_tick behind ts and every later
-                        # frame would be emitted (oversampling).
-                        while next_tick <= ts_ms + 1e-9:
-                            next_tick += every_ms
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(batches, schema=VIDEO_FRAME_SCHEMA)
-
-
-def image_stats_features(media: DataFrame) -> DataFrame:
-    """REAL decode + statistics for netpbm/BMP payloads:
-    (media_id, width, height, channels, mean per channel, std per
-    channel padded to 3). Map-only Arrow pass, no shuffle."""
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("channels", T.IntegerType()),
-            T.StructField("mean", T.ArrayType(T.DoubleType())),
-            T.StructField("std", T.ArrayType(T.DoubleType())),
-        ]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {k: [] for k in ("media_id", "width", "height", "channels", "mean", "std")}
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                w, h, c, arr = decode_raster(bytes(p))
-                flat = arr.reshape(-1, c).astype("float64")
-                rows["media_id"].append(mid)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["channels"].append(c)
-                rows["mean"].append([round(float(x), 6) for x in flat.mean(axis=0)])
-                rows["std"].append([round(float(x), 6) for x in flat.std(axis=0)])
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(batches, schema=schema)
-
-
-def resize_nearest(media: DataFrame, width: int = 32, height: int = 32) -> DataFrame:
-    """REAL nearest-neighbor resize for netpbm/BMP payloads; re-emits the
-    media schema with PPM/PGM payloads at the target resolution."""
-    import numpy as np
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads, metas = [], []
-            for p, m in zip(pdf["payload"], pdf["meta"]):
-                w, h, c, arr = decode_raster(bytes(p))
-                yi = np.minimum((np.arange(height) * h) // height, h - 1)
-                xi = np.minimum((np.arange(width) * w) // width, w - 1)
-                out = arr[yi][:, xi]
-                payloads.append(encode_ppm(out))
-                metas.append(
-                    {
-                        **m,
-                        "mime": "image/x-portable-graymap"
-                        if c in (1, 2)  # alpha dropped by encode_ppm
-                        else "image/x-portable-pixmap",
-                        "width": width,
-                        "height": height,
-                    }
-                )
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"], "payload": payloads, "meta": metas}
-            )
-
-    return media.mapInPandas(batches, schema=MEDIA_SCHEMA)

@@ -220,34 +220,13 @@ def lsh_topk(
     )
 
 
-def rademacher_bucket(vec_int: Column, signs: list[list[int]]) -> Column:
-    """LSH bucket id from ±1-plane sign projections of an int vector
-    (expression form — prefer :func:`with_rademacher_bucket` for corpora:
-    a planes×dim literal sum makes whole-stage codegen compile a huge
-    class, which costs seconds per query before the first row flows).
-    """
-    bucket = F.lit(0).cast("long")
-    for p, row in enumerate(signs):
-        proj = None
-        for j, s in enumerate(row):
-            term = F.element_at(vec_int, j + 1)
-            term = term if s > 0 else -term
-            proj = term if proj is None else proj + term
-        bucket = bucket.bitwiseOR(
-            F.when(proj > 0, F.shiftleft(F.lit(1).cast("long"), p)).otherwise(
-                F.lit(0).cast("long")
-            )
-        )
-    return bucket
-
-
 def with_rademacher_bucket(
     df: DataFrame, signs: list[list[int]], vec_col: str = "cvec", out_col: str = "bucket"
 ) -> DataFrame:
     """Append the sign-projection LSH bucket via one int64 matmul per
-    Arrow batch — bit-identical to :func:`rademacher_bucket` (projections
-    are exact int64 sums; only their signs feed the bucket), map-only,
-    and free of the wide-codegen compile cost of the expression form.
+    Arrow batch (projections are exact int64 sums; only their signs feed
+    the bucket), map-only, and free of the wide-codegen compile cost a
+    planes×dim literal-sum expression would pay.
     """
     import numpy as np
     import pandas as pd
@@ -1318,25 +1297,8 @@ class IvfIndex:
 
 
 # ---------------------------------------------------------------------------
-# embedding preprocessing — L2 normalization + int8 quantization
+# embedding preprocessing — int8 quantization
 # ---------------------------------------------------------------------------
-def l2_normalize(col: Column, decimals: int = 6) -> Column:
-    """array<float> → unit-L2 array<double>, rounded for cross-engine hash
-    stability.
-
-    Components are integer-quantized first (see :func:`quantize`) so the
-    norm is a sqrt of an exact integer sum — the division is then one
-    deterministic IEEE op per component in any engine or partitioning.
-    Map-only; the standard pre-step before cosine ANN (normalized vectors
-    turn cosine into a plain dot product).
-    """
-    qv = quantize(col)
-    nrm = F.sqrt(int_dot(qv, qv).cast("double"))
-    return F.transform(
-        qv, lambda x: F.round(x.cast("double") / nrm, decimals)
-    )
-
-
 def quantize_int8(col: Column) -> Column:
     """array<float> → symmetric int8-style quantization: round(x*127/max|x|).
 

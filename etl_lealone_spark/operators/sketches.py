@@ -118,92 +118,6 @@ def hash_sample_pred_sql(key_expr: str, rate: int) -> str:
 
 
 # ---------------------------------------------------------------------------
-# Misra-Gries heavy hitters — the bounded-memory frequent-items sketch
-# ---------------------------------------------------------------------------
-def misra_gries_summary(pdf_iter, col: str, k: int):
-    """Per-partition Misra-Gries fold over Arrow batches: at most ``k``
-    (item, weight) counters, each true count undercounted by at most
-    n_partition/(k+1)."""
-    counters: dict = {}
-    for pdf in pdf_iter:
-        for item in pdf[col]:
-            if item in counters:
-                counters[item] += 1
-            elif len(counters) < k:
-                counters[item] = 1
-            else:
-                # decrement-all: the classic O(1)-amortized step
-                dead = []
-                for key in counters:
-                    counters[key] -= 1
-                    if counters[key] == 0:
-                        dead.append(key)
-                for key in dead:
-                    del counters[key]
-    import pandas as pd
-
-    yield pd.DataFrame(
-        {"item": list(counters), "w": list(counters.values())}
-    )
-
-
-def merge_mg(summaries: list[dict], k: int) -> dict:
-    """Merge Misra-Gries summaries (Agarwal et al. 2013: add weights,
-    then subtract the (k+1)-th largest and drop non-positives) — the
-    error bounds add, so the merged summary keeps the n/(k+1) guarantee
-    over the COMBINED stream."""
-    total: dict = {}
-    for s in summaries:
-        for item, w in s.items():
-            total[item] = total.get(item, 0) + w
-    if len(total) > k:
-        cut = sorted(total.values(), reverse=True)[k]
-        total = {i: w - cut for i, w in total.items() if w - cut > 0}
-    return total
-
-
-def heavy_hitters(
-    df: DataFrame, col: str, k: int = 16
-) -> list[tuple]:
-    """Items whose true frequency may exceed n/(k+1), with lower-bound
-    weights — distributed Misra-Gries.
-
-    Each partition folds its rows into a ≤k-counter summary (one
-    sequential Arrow pass, O(k) memory — the whole point: exact top-k
-    needs a full groupBy shuffle; this needs k counters per partition
-    and a driver-side merge of p*k rows). The per-partition summaries
-    merge with the weight-subtraction rule, preserving the combined
-    n/(k+1) undercount bound. Guarantees (pinned by test):
-    every item with true count > n/(k+1) IS in the result, and every
-    reported weight is a lower bound within n/(k+1) of the true count.
-
-    The result depends on partition order only WITHIN the error bound —
-    the guarantee, not the exact weights, is the sketch's contract
-    (same as every streaming-summary implementation).
-    """
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("item", df.schema[col].dataType),
-            T.StructField("w", T.LongType()),
-        ]
-    )
-    rows = (
-        df.select(col)
-        .mapInPandas(lambda it: misra_gries_summary(it, col, k), schema=schema)
-        .collect()
-    )
-    # the same item may appear in several partition summaries: summing
-    # its weights is exactly the first half of the merge rule
-    total: dict = {}
-    for r in rows:
-        total[r["item"]] = total.get(r["item"], 0) + r["w"]
-    merged = merge_mg([total], k)
-    return sorted(merged.items(), key=lambda kv: (-kv[1], str(kv[0])))
-
-
-# ---------------------------------------------------------------------------
 # Count-Min sketch (Cormode & Muthukrishnan 2005) — point-frequency
 # estimates in depth x width integer counters. Mergeable by cell-wise
 # addition; est(v) = min over lanes of counter[lane][bucket_lane(v)],

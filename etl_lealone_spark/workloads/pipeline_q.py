@@ -266,8 +266,7 @@ def decontaminate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Unit-L2 normalization (turns cosine ANN into plain dot products); "
     "integer-quantized norm for cross-engine determinism, map-only. "
     "Driver-facing output md5s the 1e-6-quantized unit vector (xhash "
-    "rule: no raw array cells) and adds the exact integer squared norm; "
-    "the raw-array operator l2_normalize is pytest-pinned.",
+    "rule: no raw array cells) and adds the exact integer squared norm.",
 )
 def embedding_l2_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import int_dot, quantize

@@ -664,13 +664,12 @@ def ccnet_fluency_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Unigram-LM tokenizer seed inventory (Kudo 2018; operators/unigram.py
-# step 2): every substring up to length 4 of every corpus word,
-# weighted by word frequency — the candidate-piece table the EM loop
+# Unigram-LM tokenizer seed inventory (Kudo 2018, the seeding step):
+# every substring up to length 4 of every corpus word, weighted by word
+# frequency — the candidate-piece table a unigram-LM trainer's EM loop
 # starts from. Sibling of bpe_pair_counts: both pin the one
-# SQL-expressible stage of their trainer with a full oracle (the EM
-# iterations themselves are pinned bit-identical to a pure-Python
-# reference in tests/test_unigram.py instead).
+# SQL-expressible stage of a tokenizer trainer with a full oracle; the
+# engine carries no unigram EM trainer itself.
 # ---------------------------------------------------------------------------
 @workload(
     "unigram_seed_pieces",

@@ -360,31 +360,6 @@ def recall_probe(ks) -> None:
         )
 
 
-def unigram_probe(ks) -> None:
-    """Wall-vs-corpus curve for the unigram-LM trainer. The per-word
-    copy tags make the VOCABULARY grow ~K× with the corpus — the
-    trainer's true scaling axis (its E-step runs over distinct words,
-    not documents), so this measures the worst case."""
-    from etl_lealone_spark.operators.unigram import unigram_train
-
-    spark = build_spark(
-        app_name="scale_probe_unigram", cores=default_parallelism()
-    )
-    t = load_tables(spark, SF_DIR)
-    for k in ks:
-        docs = scaled_docs(t, k).localCheckpoint()
-        nd = docs.count()
-        t0 = time.time()
-        model = unigram_train(
-            docs, vocab_size=200, seed_size=512, em_iters=2
-        )
-        wall = time.time() - t0
-        print(
-            f"K={k} docs={nd} pieces={len(model)} wall={wall:.2f}s",
-            flush=True,
-        )
-
-
 def batch_probe(nqs: list[int]) -> None:
     """IvfIndex.topk vs topk_batch wall clock over growing QUERY-set
     sizes (corpus fixed at sf0.1): the per-query path collects the
@@ -723,9 +698,6 @@ if __name__ == "__main__":
     elif "--recall" in sys.argv:
         ks = [int(a) for a in sys.argv[1:] if a != "--recall"] or [1, 3, 10, 30]
         recall_probe(ks)
-    elif "--unigram" in sys.argv:
-        ks = [int(a) for a in sys.argv[1:] if a != "--unigram"] or [1, 3, 10]
-        unigram_probe(ks)
     elif "--hardneg" in sys.argv:
         ks = [int(a) for a in sys.argv[1:] if a != "--hardneg"] or [1, 3, 10]
         hardneg_probe(ks)

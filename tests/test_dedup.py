@@ -10,7 +10,6 @@ from etl_lealone_spark.operators.dedup import (
     minhash_dedup_keep_ids,
     minhash_lsh_pairs,
     ngram_jaccard_pairs_blocked,
-    simhash64,
     simhash_pairs,
     word_shingles,
 )
@@ -70,11 +69,6 @@ def test_minhash_dedup_keep_ids(docs):
 
 
 def test_simhash_deterministic_and_near(spark, docs):
-    fp = docs.select("doc_id", simhash64(F.col("text")).alias("fp")).collect()
-    fps = {r["doc_id"]: r["fp"] for r in fp}
-    assert fps[1] == fps[2]  # identical text → identical fingerprint
-    # near-dup within a few bits, far doc... just sanity: fp is a long
-    assert isinstance(fps[1], int)
     pairs = simhash_pairs(docs, max_hamming=10).collect()
     got = {(r["id_a"], r["id_b"]): r["hamming"] for r in pairs}
     assert got[(1, 2)] == 0

@@ -178,8 +178,8 @@ def test_bloom_bitmap_saturation_caps_size(spark):
 def test_bloom_m_bits_guards(spark):
     """r12 advisor items: (1) the dense bitmap bounds m_bits at build
     time (a near-empty filter with a huge m_bits would broadcast MBs per
-    probe task), (2) build/probe m_bits disagreement RAISES instead of
-    returning silently-wrong membership."""
+    probe task), (2) build/probe disagreement on m_bits, k or tag RAISES
+    instead of returning silently-wrong membership."""
     import pytest
 
     from etl_lealone_spark.operators.joins import (
@@ -199,8 +199,9 @@ def test_bloom_m_bits_guards(spark):
     ok = probe.filter(bloom_pass_flag(F.col("k"), m_bits=8192)).count()
     assert ok == 5
     # disagreeing probe: typed failure, not wrong-but-quiet membership
-    with pytest.raises(Exception, match="m_bits mismatch"):
-        probe.filter(bloom_pass_flag(F.col("k"), m_bits=16384)).count()
+    for bad in ({"m_bits": 16384}, {"k": 4}, {"tag": "other"}):
+        with pytest.raises(Exception, match="parameter mismatch"):
+            probe.filter(bloom_pass_flag(F.col("k"), **bad)).count()
 
 
 def test_bloom_empty_build_side_passes_nothing(spark):

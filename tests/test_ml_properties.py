@@ -3,12 +3,11 @@
 The strongest determinism pin available: a pure-Python reference that
 replays the EXACT rounding sequence (quantize -> integer distance ->
 float-division mean -> floor requantization) and must match the
-distributed operator bit-for-bit on arbitrary inputs — the
-test_unigram precedent. k-means and the correlation matrix qualify
-(their float ops are mul/div/sqrt/floor, all IEEE-correctly-rounded and
-therefore engine- and host-portable); the ln-based operators (NB,
-TF-IDF) are pinned by invariants instead — libm ln is not guaranteed
-identical across runtimes, so a pure-Python ln replay would be asserting
+distributed operator bit-for-bit on arbitrary inputs. k-means and the
+correlation matrix qualify (their float ops are mul/div/sqrt/floor, all
+IEEE-correctly-rounded and therefore engine- and host-portable); the
+ln-based operators (NB, TF-IDF) are pinned by invariants instead — libm
+ln is not guaranteed identical across runtimes, so a pure-Python ln replay would be asserting
 more than the engines themselves promise each other (their cross-engine
 agreement is pinned empirically by the DuckDB oracle gate at 3 SFs).
 """

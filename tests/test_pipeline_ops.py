@@ -151,18 +151,6 @@ def test_decontaminate_ngram_overlap(spark):
 # ---------------------------------------------------------------------------
 # embedding preprocessing
 # ---------------------------------------------------------------------------
-def test_l2_normalize_unit_norm(spark):
-    from etl_lealone_spark.operators.similarity import l2_normalize
-
-    d = spark.createDataFrame(
-        [(1, [3.0, 4.0]), (2, [1.0, 0.0])], "vec_id long, embedding array<float>"
-    )
-    out = {r["vec_id"]: r["vnorm"] for r in
-           d.select("vec_id", l2_normalize(F.col("embedding")).alias("vnorm")).collect()}
-    assert abs(out[1][0] - 0.6) < 1e-6 and abs(out[1][1] - 0.8) < 1e-6
-    assert out[2] == [1.0, 0.0]
-
-
 def test_quantize_int8_roundtrip(spark):
     from etl_lealone_spark.operators.similarity import (
         quantize_int8,

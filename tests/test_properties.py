@@ -411,28 +411,6 @@ def test_bpe_merge_fold_matches_python(spark, syms):
 
 
 # ---------------------------------------------------------------------------
-# netpbm encode/decode roundtrip (operators/multimodal.py)
-# ---------------------------------------------------------------------------
-@given(
-    w=st.integers(1, 12),
-    h=st.integers(1, 9),
-    c=st.sampled_from([1, 3]),
-    seed=st.integers(0, 2**31 - 1),
-)
-@settings(**_SETTINGS)
-def test_netpbm_roundtrip_random(w, h, c, seed):
-    import numpy as np
-
-    from etl_lealone_spark.operators.multimodal import decode_raster, encode_ppm
-
-    rng = np.random.default_rng(seed)
-    arr = rng.integers(0, 256, size=(h, w, c), dtype=np.uint8)
-    w2, h2, c2, back = decode_raster(encode_ppm(arr))
-    assert (w2, h2, c2) == (w, h, c)
-    assert np.array_equal(back, arr)
-
-
-# ---------------------------------------------------------------------------
 # PageRank mass conservation on random graphs
 # ---------------------------------------------------------------------------
 RAND_EDGES = st.lists(

@@ -90,62 +90,6 @@ def test_native_hll_within_tolerance(spark, tables):
     assert abs(approx - exact) / exact < 0.15
 
 
-# ---------------------------------------------------------------------------
-# Misra-Gries heavy hitters
-# ---------------------------------------------------------------------------
-def test_heavy_hitters_guarantee(spark):
-    """Every item above the n/(k+1) threshold must be reported, and every
-    reported weight is a lower bound within n/(k+1) of the true count."""
-    from collections import Counter
-
-    from etl_lealone_spark.operators.sketches import heavy_hitters
-
-    # zipf-ish stream: item i appears ~1000/i times
-    items = []
-    for i in range(1, 40):
-        items += [f"it{i}"] * (1000 // i)
-    true = Counter(items)
-    n, k = len(items), 8
-    d = spark.createDataFrame([(x,) for x in items], "v string").repartition(6)
-
-    got = dict(heavy_hitters(d, "v", k=k))
-    thresh = n / (k + 1)
-    for item, cnt in true.items():
-        if cnt > thresh:
-            assert item in got, (item, cnt, thresh)
-    for item, w in got.items():
-        assert w <= true[item]                 # lower bound
-        assert true[item] - w <= thresh + 1    # within the error bound
-    assert len(got) <= k
-
-
-def test_heavy_hitters_single_dominant(spark):
-    from etl_lealone_spark.operators.sketches import heavy_hitters
-
-    rows = [("hot",)] * 900 + [(f"cold{i}",) for i in range(100)]
-    d = spark.createDataFrame(rows, "v string").repartition(5)
-    got = dict(heavy_hitters(d, "v", k=4))
-    assert "hot" in got and got["hot"] >= 900 - 1000 / 5
-
-
-def test_merge_mg_combines_summaries_with_bound():
-    """Merging per-stream Misra-Gries summaries keeps the combined
-    guarantee: weights add, the (k+1)-th largest is subtracted, and no
-    item's merged weight exceeds its true combined count."""
-    from etl_lealone_spark.operators.sketches import merge_mg
-
-    s1 = {"a": 10, "b": 4, "c": 1}
-    s2 = {"a": 7, "d": 6, "e": 2}
-    merged = merge_mg([s1, s2], k=3)
-    assert len(merged) <= 3
-    assert merged["a"] == 17 - sorted(
-        {"a": 17, "b": 4, "c": 1, "d": 6, "e": 2}.values(), reverse=True
-    )[3]
-    assert all(w > 0 for w in merged.values())
-    # merging with an empty summary is identity-after-cut
-    assert merge_mg([s1, {}], k=3) == merge_mg([s1], k=3)
-
-
 def test_cms_overestimates_and_merges(spark):
     """Count-Min invariants: est(v) >= true(v) for every v (one-sided
     error by construction), exact for collision-free terms at small
